@@ -21,6 +21,7 @@ import argparse
 import json
 import os
 import shutil
+import statistics
 import subprocess
 import sys
 import tempfile
@@ -399,7 +400,7 @@ def run_once(sf_dir: str, cpus: int, *, maintenance_only: bool = False,
                 vals = sorted(t[k] for t in raw_trials)
                 spread[k] = {
                     "min": round(vals[0], 3),
-                    "median": round(vals[len(vals) // 2], 3),
+                    "median": round(statistics.median(vals), 3),
                     "max": round(vals[-1], 3),
                 }
         return {

@@ -10,11 +10,26 @@ Bounds are stored as JSON-encoded strings keyed by column name; comparisons are
 restored per-type at prune time (`plans/pruning.py`). String upper bounds are
 truncated-with-increment (Iceberg-style) so long `text` payloads do not bloat
 metadata while remaining valid upper bounds.
+
+Each process decodes a manifest or manifest list once. Both kinds of file
+are write-once (uuid-named), so a decode stays valid for as long as the file
+at its path is the same one. A read costs one ``os.stat``: the cache key is
+``(path, st_size, st_mtime_ns)``, and a file replaced at the same path is
+decoded again; a removed file raises ``FileNotFoundError`` as an uncached
+read would. The cache is an LRU bounded by ``CACHE_BUDGET_BYTES`` of encoded
+(on-disk) bytes, a module constant; decoded records take about 7x their
+encoded size. A file larger than the budget is decoded on every read. A hit
+is never shared mutably: every read returns fresh record dicts with fresh
+maps and lists, so callers, and the ``DataFile`` objects built from the
+records, may mutate what they get.
 """
 
 from __future__ import annotations
 
 import json
+import os
+import threading
+from collections import OrderedDict
 from dataclasses import dataclass, field
 
 from . import avro
@@ -24,6 +39,9 @@ STATUS_ADDED = 1
 STATUS_DELETED = 2
 
 _STRING_BOUND_MAX = 32
+
+# budget of the decoded-file cache, in encoded (on-disk) bytes
+CACHE_BUDGET_BYTES = 16 * 1024 * 1024
 
 MANIFEST_ENTRY_SCHEMA = {
     "type": "record",
@@ -203,7 +221,6 @@ def write_manifest(path: str, files: list[DataFile], snapshot_id: int,
             e["data_sequence"] = sequence_number
         entries.append(e)
     avro.write_ocf(path, MANIFEST_ENTRY_SCHEMA, entries)
-    import os
 
     # Partition summaries span the UNION of keys across entries (a manifest
     # rewrite may pack files from different partition-spec eras). A key is
@@ -236,9 +253,66 @@ def write_manifest(path: str, files: list[DataFile], snapshot_id: int,
     }
 
 
+class _DecodeCache:
+    """Decoded records by path, with the ``(st_size, st_mtime_ns)`` they
+    were decoded at; LRU within ``CACHE_BUDGET_BYTES`` of encoded size."""
+
+    def __init__(self) -> None:
+        self._lock = threading.Lock()
+        # path -> ((size, mtime_ns), nested field names, records)
+        self._items: OrderedDict[
+            str, tuple[tuple[int, int], tuple[str, ...], list[dict]]] = OrderedDict()
+        self.nbytes = 0
+
+    def read(self, path: str) -> list[dict]:
+        """Fresh copies of the file's records. The decode runs outside the
+        lock; two threads missing on one path both decode it."""
+        st = os.stat(path)
+        key = (st.st_size, st.st_mtime_ns)
+        with self._lock:
+            hit = self._items.get(path)
+            if hit is not None and hit[0] == key:
+                self._items.move_to_end(path)
+                return _copy_records(hit[2], hit[1])
+        schema, records = avro.read_ocf(path)
+        nested = _nested_fields(schema)
+        out = _copy_records(records, nested)
+        if st.st_size <= CACHE_BUDGET_BYTES:
+            with self._lock:
+                old = self._items.pop(path, None)
+                if old is not None:
+                    self.nbytes -= old[0][0]
+                self._items[path] = (key, nested, records)
+                self.nbytes += st.st_size
+                while self.nbytes > CACHE_BUDGET_BYTES:
+                    _, (k, _, _) = self._items.popitem(last=False)
+                    self.nbytes -= k[0]
+        return out
+
+
+_decoded = _DecodeCache()
+
+
+def _nested_fields(schema: dict) -> tuple[str, ...]:
+    """Record fields that decode to a map or an array."""
+    return tuple(f["name"] for f in schema["fields"]
+                 if isinstance(f["type"], dict)
+                 and f["type"]["type"] in ("map", "array"))
+
+
+def _copy_records(records: list[dict], nested: tuple[str, ...]) -> list[dict]:
+    # map and array values hold only scalars, so one level of copy suffices
+    out = []
+    for r in records:
+        c = r.copy()
+        for k in nested:
+            c[k] = c[k].copy()
+        out.append(c)
+    return out
+
+
 def read_manifest(path: str) -> list[dict]:
-    _, entries = avro.read_ocf(path)
-    return entries
+    return _decoded.read(path)
 
 
 def live_files(manifest_paths: list[str], content: str = "data") -> list[DataFile]:
@@ -261,8 +335,7 @@ def write_manifest_list(path: str, manifest_files: list[dict]) -> None:
 
 
 def read_manifest_list(path: str) -> list[dict]:
-    _, records = avro.read_ocf(path)
-    return records
+    return _decoded.read(path)
 
 
 def manifest_entries_df(spark, manifest_paths: list[str], *,

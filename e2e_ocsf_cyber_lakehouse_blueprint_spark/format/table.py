@@ -287,6 +287,14 @@ class Table:
         """Equality-delete files live in the snapshot (Iceberg v2 eqdels)."""
         return self._live_files(snapshot_id, "eqdel")
 
+    def live_deletes(self, snapshot_id: int | None = None
+                     ) -> tuple[list[DataFile], list[DataFile]]:
+        """(positional-delete files, equality-delete files) live in the
+        snapshot, from one pass over its manifests."""
+        files = self._live_files(snapshot_id, None)
+        return ([f for f in files if f.content == "posdel"],
+                [f for f in files if f.content == "eqdel"])
+
     def _live_files(self, snapshot_id: int | None, content: str | None) -> list[DataFile]:
         s = (
             self.meta.snapshot_by_id(snapshot_id)
@@ -365,10 +373,12 @@ class Table:
         schema = self.schema
         if not files:
             return self.spark.createDataFrame([], schema)
+        if delete_files is None or eq_delete_files is None:
+            live_dels, live_eqdels = self.live_deletes(snapshot_id)
         dels = (list(delete_files) if delete_files is not None
-                else self.live_delete_files(snapshot_id))
+                else live_dels)
         eqdels = (list(eq_delete_files) if eq_delete_files is not None
-                  else self.live_eq_delete_files(snapshot_id))
+                  else live_eqdels)
         scanned = {f.path for f in files}
         hit = [d for d in dels if scanned.intersection(d.covered_paths)]
         # an eqdel applies to a data file iff the file's rows were committed

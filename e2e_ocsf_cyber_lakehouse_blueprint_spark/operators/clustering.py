@@ -148,10 +148,9 @@ class ClusteringJob:
 
     def _plan(self) -> list[PartitionClusterPlan]:
         self._skipped_clustered = 0
-        dels = self.table.live_delete_files()
+        dels, self._eqdels = self.table.live_deletes()
         self._del_covered = set().union(
             *[set(d.covered_paths) for d in dels]) if dels else set()
-        self._eqdels = self.table.live_eq_delete_files()
         by_part: dict[str, list[DataFile]] = {}
         parts: dict[str, dict] = {}
         for f in self.table.live_data_files():
@@ -192,8 +191,7 @@ class ClusteringJob:
             turn_range=turn_range, ts_us_range=ts_range,
         )
 
-        dels = self.table.live_delete_files()      # pinned once per job
-        eqdels = self.table.live_eq_delete_files()
+        dels, eqdels = self.table.live_deletes()   # pinned once per job
 
         def writer(group, job_tag):
             return write_group_global_range(

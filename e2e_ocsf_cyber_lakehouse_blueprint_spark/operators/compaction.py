@@ -129,8 +129,7 @@ def write_group_binpack(table: Table, group: RewriteGroup,
     spec = table.spec
     # pin BOTH delete-file kinds once per job: a per-child live lookup would
     # re-read the manifest list O(groups) times
-    dels = table.live_delete_files()
-    eqdels = table.live_eq_delete_files()
+    dels, eqdels = table.live_deletes()
 
     def child(plan):
         # broadcast-anti DV application is narrow: scan-task partitioning (the
@@ -175,10 +174,10 @@ def write_group_global_range(table: Table, group: RewriteGroup, key_col_name: st
     files = [f for p in group.plans for f in p.input_files]
     # callers pin the delete lists once per JOB (a live lookup here would
     # re-read the manifest list per group)
-    dels = (delete_files if delete_files is not None
-            else table.live_delete_files())
-    eqdels = (eq_delete_files if eq_delete_files is not None
-              else table.live_eq_delete_files())
+    if delete_files is None or eq_delete_files is None:
+        live_dels, live_eqdels = table.live_deletes()
+    dels = delete_files if delete_files is not None else live_dels
+    eqdels = eq_delete_files if eq_delete_files is not None else live_eqdels
     keys = spec.column_names + [key_col_name]
     n = max(1, group.n_output_files)
     # Physical-strategy choice by data volume (what a cost-based planner
@@ -317,11 +316,10 @@ def _masks_explain_empty(table: Table, plan) -> bool:
     """True when outstanding delete files can legitimately mask EVERY row of
     the plan's inputs (an all-deleted partition rewrites to zero files)."""
     paths = {f.path for f in plan.input_files}
-    if any(paths.intersection(d.covered_paths)
-           for d in table.live_delete_files()):
+    dels, eqdels = table.live_deletes()
+    if any(paths.intersection(d.covered_paths) for d in dels):
         return True
     from ..format.table import _eq_bounds_may_match
-    eqdels = table.live_eq_delete_files()
     return any(
         d.data_sequence > f.data_sequence and _eq_bounds_may_match(f, d)
         for f in plan.input_files for d in eqdels

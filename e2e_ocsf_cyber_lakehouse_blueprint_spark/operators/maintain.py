@@ -159,8 +159,7 @@ def run_maintenance(
     # positional marks, and drop dangling rows
     rewrite_deletes = None
     max_dv = table.property_int("maintenance.rewrite-deletes.max-count", 4)
-    n_delete_files = (len(table.live_delete_files())
-                      + len(table.live_eq_delete_files()))
+    n_delete_files = sum(map(len, table.live_deletes()))
     if max_dv > 0 and n_delete_files > max_dv:
         from .rewrite_deletes import RewriteDeletesJob
         rewrite_deletes = RewriteDeletesJob(table).run()

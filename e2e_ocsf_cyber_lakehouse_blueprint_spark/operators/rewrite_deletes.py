@@ -64,8 +64,7 @@ class RewriteDeletesJob:
         t0 = time.time()
         table = self.table
         table.refresh()
-        dels = table.live_delete_files()
-        eqdels = table.live_eq_delete_files()
+        dels, eqdels = table.live_deletes()
         rows_in = sum(d.record_count for d in dels)
         if not dels and not eqdels:
             return RewriteDeletesResult(None, 0, 0, 0, 0, time.time() - t0)

@@ -101,8 +101,7 @@ def metadata_agg(
                 return None
 
     files = table.plan_scan(predicates, snapshot_id)
-    dels = table.live_delete_files(snapshot_id)
-    eqdels = table.live_eq_delete_files(snapshot_id)
+    dels, eqdels = table.live_deletes(snapshot_id)
     min_seq = min((f.data_sequence for f in files), default=0)
     if any(d.data_sequence > min_seq for d in eqdels):
         return None

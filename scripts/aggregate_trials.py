@@ -13,10 +13,7 @@ Usage: python scripts/aggregate_trials.py out.json in1.jsonl [in2 ...]
 from __future__ import annotations
 
 import json
-import os
 import sys
-
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> None:
@@ -33,7 +30,10 @@ def main() -> None:
                 for cpus, trials in d["runs"].items():
                     runs.setdefault(str(cpus), []).extend(trials)
                     for t in trials:
-                        turns = turns or t.get("turns")
+                        if turns is None:
+                            turns = t.get("turns")
+                        assert t.get("turns") == turns, \
+                            "different inputs cannot be merged"
                 continue
             if "queries" not in d or "cpus" not in d:
                 continue  # error line
