@@ -22,10 +22,15 @@ encoded size. A file larger than the budget is decoded on every read. A hit
 is never shared mutably: every read returns fresh record dicts with fresh
 maps and lists, so callers, and the ``DataFile`` objects built from the
 records, may mutate what they get.
+
+``decode_bound`` is memoised (an LRU of ``BOUND_CACHE_ENTRIES``): every plan
+of a cached manifest compares the same bound strings again, and each decodes
+to an immutable JSON scalar, so one decoded value serves every caller.
 """
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import threading
@@ -33,6 +38,7 @@ from collections import OrderedDict
 from dataclasses import dataclass, field
 
 from . import avro
+from ..session import local_frame
 
 STATUS_EXISTING = 0
 STATUS_ADDED = 1
@@ -42,6 +48,8 @@ _STRING_BOUND_MAX = 32
 
 # budget of the decoded-file cache, in encoded (on-disk) bytes
 CACHE_BUDGET_BYTES = 16 * 1024 * 1024
+# distinct bound strings kept decoded (a few bounds per column per live file)
+BOUND_CACHE_ENTRIES = 1 << 16
 
 MANIFEST_ENTRY_SCHEMA = {
     "type": "record",
@@ -136,6 +144,7 @@ def encode_bound(value) -> str:
     return json.dumps(value, default=str, separators=(",", ":"))
 
 
+@functools.lru_cache(maxsize=BOUND_CACHE_ENTRIES)
 def decode_bound(s: str):
     return json.loads(s)
 
@@ -387,7 +396,7 @@ def manifest_entries_df(spark, manifest_paths: list[str], *,
                     rows.append(row)
             yield pd.DataFrame(rows, columns=[f.name for f in out_schema.fields])
 
-    paths_df = spark.createDataFrame(
-        [(p,) for p in manifest_paths], "manifest string"
+    paths_df = local_frame(
+        spark, [(p,) for p in manifest_paths], "manifest string"
     ).repartition(max(1, min(len(manifest_paths), 64)))
     return paths_df.mapInPandas(_scan, out_schema)

@@ -36,6 +36,7 @@ from .manifest import DataFile
 from .partition import PartitionSpec
 from .stats import harvest_file_stats, layout_bloom_cols, layout_hash_cols
 from ..plans.pruning import Predicate, prune_files, prune_manifest_records
+from ..session import local_frame
 
 
 def _eq_bounds_may_match(f: DataFile, d: DataFile) -> bool:
@@ -372,7 +373,7 @@ class Table:
         vectors into rewritten files."""
         schema = self.schema
         if not files:
-            return self.spark.createDataFrame([], schema)
+            return local_frame(self.spark, [], schema)
         if delete_files is None or eq_delete_files is None:
             live_dels, live_eqdels = self.live_deletes(snapshot_id)
         dels = (list(delete_files) if delete_files is not None
@@ -566,7 +567,7 @@ class Table:
             if to_snapshot_id is not None else self.current_snapshot()
         )
         if to_snap is None:
-            return self.spark.createDataFrame([], self.schema)
+            return local_frame(self.spark, [], self.schema)
         lo = from_snapshot_id if from_snapshot_id is not None else -1
         in_range = [
             s for s in self.snapshots
@@ -591,7 +592,7 @@ class Table:
             if f.path not in prev
         ]
         if not added:
-            df = self.spark.createDataFrame([], self.schema)
+            df = local_frame(self.spark, [], self.schema)
         else:
             df = self.read_parquet([f.path for f in added])
         if columns:

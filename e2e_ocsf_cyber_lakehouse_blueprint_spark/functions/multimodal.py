@@ -23,6 +23,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..session import local_frame
+
 MEDIA_SCHEMA = T.StructType([
     T.StructField("media_id", T.LongType()),
     T.StructField("kind", T.StringType()),          # image | audio | video
@@ -171,4 +173,4 @@ def synthetic_media(spark, n: int = 64, seed: int = 5) -> DataFrame:
             i, kind, bytearray(payload),
             (64 + i % 512, 48 + i % 256, 1000 * (1 + i % 10), "stub"),
         ))
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
+    return local_frame(spark, rows, MEDIA_SCHEMA)

@@ -42,6 +42,7 @@ from pyspark.sql import functions as F
 
 from ..format import manifest as mf
 from ..format.table import Table
+from ..session import local_frame
 
 CHANGE_TYPE_COL = "_change_type"
 COMMIT_COL = "_commit_snapshot_id"
@@ -136,7 +137,7 @@ def change_feed(
                 "the change feed follows one line of history")
         chain = chain[ids.index(from_snapshot_id) + 1:]
 
-    empty = (spark.createDataFrame([], schema)
+    empty = (local_frame(spark, [], schema)
              .withColumn(CHANGE_TYPE_COL, F.lit("insert"))
              .withColumn(COMMIT_COL, F.lit(0).cast("long")))
     slices: list[DataFrame] = [empty]

@@ -40,6 +40,7 @@ from pyspark.sql import functions as F
 
 from ..format import manifest as mf
 from ..format.table import Table
+from ..session import local_frame
 from .ledger import Ledger
 
 
@@ -174,15 +175,18 @@ class ExpireSnapshotsJob:
 
         spark = self.table.spark
         listing = self.listing_df if self.listing_df is not None else disk_listing(self.table)
+        # references are read after the listing (Spark's file index lists
+        # when the frame is built), so a file committed while the listing
+        # was taken counts as referenced, not as an orphan
+        self.table.refresh()
         refs = referenced_files(self.table)
         protected = _inflight_ledger_outputs(self.table)
 
         # keep side of the anti-join: metadata-sized (manifest refs + in-flight
         # ledger outputs) -> broadcast; the unbounded side (the listing) stays
         # distributed end to end
-        refs_df = spark.createDataFrame(
-            [(p,) for p in sorted(refs | protected)] or [("",)], "path string"
-        )
+        refs_df = local_frame(
+            spark, [(p,) for p in sorted(refs | protected)], "path string")
         orphans = listing.join(F.broadcast(refs_df), "path", "left_anti")
         if self.grace_period_sec:
             cutoff = time.time() - self.grace_period_sec

@@ -38,6 +38,7 @@ from pyspark.sql import functions as F
 from ..format.manifest import DataFile, decode_bound
 from ..format.table import Table
 from ..format.stats import inputs_carry_key_stats
+from ..session import local_frame
 from .ledger import Ledger, partition_key, spill_metrics
 from .skew import salted_join
 
@@ -146,9 +147,11 @@ def _scope_files(
         bounded.append(f)
         hlo = f.lower_bounds.get(f"xxh64({key0})")
         hhi = f.upper_bounds.get(f"xxh64({key0})")
+        # lo/hi are string columns whatever the key type, rendered as
+        # manifest_entries_df renders them for scope_paths_distributed
         row = [
             len(bounded) - 1,
-            decode_bound(lo_s), decode_bound(hi_s),
+            str(decode_bound(lo_s)), str(decode_bound(hi_s)),
             decode_bound(hlo) if hlo else None,
             decode_bound(hhi) if hhi else None,
         ]
@@ -163,7 +166,7 @@ def _scope_files(
     spark = table.spark
     ddl = "fid int, lo string, hi string, hlo long, hhi long" + "".join(
         f", lo{i} {t}, hi{i} {t}" for i, (_c, t) in enumerate(dims[1:], 1))
-    bounds_df = spark.createDataFrame(rows, ddl)
+    bounds_df = local_frame(spark, rows, ddl)
     keys = source.select(
         *[F.col(c).alias(f"_k{i}") for i, (c, _) in enumerate(dims)]
     ).distinct()

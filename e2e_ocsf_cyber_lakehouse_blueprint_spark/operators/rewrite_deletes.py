@@ -30,6 +30,7 @@ from dataclasses import dataclass
 from pyspark.sql import functions as F
 
 from ..format.table import Table
+from ..session import local_frame
 from .delete import record_rewrite_lineage, write_posdel_files
 from .ledger import spill_metrics
 
@@ -72,8 +73,7 @@ class RewriteDeletesJob:
         spark = table.spark
         data_files = table.live_data_files()
         live = sorted(f.path for f in data_files)
-        live_df = spark.createDataFrame([(p,) for p in live] or [("",)],
-                                        "file_path string")
+        live_df = local_frame(spark, [(p,) for p in live], "file_path string")
         pruned = None
         if dels:
             marks = spark.read.parquet(*[d.path for d in dels])
@@ -147,8 +147,9 @@ class RewriteDeletesJob:
             return None, 0
         raw = table.read_parquet([f.path for f in cand],
                                  filepos=("file_path", "pos"))
-        seq_df = spark.createDataFrame(
-            [(f.path, f.data_sequence) for f in cand], "path string, _seq long")
+        seq_df = local_frame(
+            spark, [(f.path, f.data_sequence) for f in cand],
+            "path string, _seq long")
         raw = raw.join(F.broadcast(seq_df),
                        raw["file_path"] == seq_df["path"], "left").drop("path")
         by_keys = {}

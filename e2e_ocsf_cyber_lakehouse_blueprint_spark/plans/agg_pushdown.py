@@ -24,6 +24,11 @@ that survives pruning into:
   metadata partial and folded: counts SUM, mins MIN, maxes MAX. The plan is
   fully declarative — no driver-side collect of data rows.
 
+The metadata partial enters Spark through ``session.local_frame`` (as
+every driver-held row does), so it is a ``LocalRelation``: a fully covered
+answer collects with zero Spark jobs, and its naive timestamps are UTC wall
+time whatever the driver host's local zone.
+
 Soundness gates (fall back to the normal scan by returning ``None``):
 
 - any live **equality delete** in sequence range, or any positional delete
@@ -46,6 +51,7 @@ from typing import Any, Sequence
 from pyspark.sql import DataFrame, functions as F, types as T
 
 from ..format.manifest import DataFile, decode_bound
+from ..session import local_frame
 from .pruning import Predicate, covers_bounds, _stat_name
 
 # bound encodings for these types decode to values whose Python ordering
@@ -114,17 +120,16 @@ def metadata_agg(
         # live-path restriction via a broadcast semi-join, not a giant
         # isin literal — at 10^5+ files an IN expression tree chokes
         # codegen while a metadata-sized build side broadcasts fine
-        live = table.spark.createDataFrame(
-            [(p,) for p in paths], "file_path string")
+        live = local_frame(
+            table.spark, [(p,) for p in paths], "file_path string")
         masked = (
             table.spark.read.parquet(*[d.path for d in hit_dels])
             .join(F.broadcast(live), "file_path", "left_semi")
             .select("file_path", "pos").distinct().count()
         )
         row = [tuple(total - masked for _ in items)]
-        return table.spark.createDataFrame(
-            row, T.StructType([T.StructField(it.alias, T.LongType())
-                               for it in items]))
+        return local_frame(table.spark, row, T.StructType(
+            [T.StructField(it.alias, T.LongType()) for it in items]))
 
     names = {
         col: [col] + list(reversed(olds))
@@ -189,7 +194,7 @@ def metadata_agg(
     except (KeyError, TypeError, ValueError):
         return None  # malformed/unexpected stats: take the ordinary scan
 
-    meta_df = table.spark.createDataFrame([tuple(meta_vals)], out_schema)
+    meta_df = local_frame(table.spark, [tuple(meta_vals)], out_schema)
     if not residual:
         return meta_df
 

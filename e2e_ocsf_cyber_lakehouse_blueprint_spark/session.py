@@ -6,13 +6,19 @@ a multi-executor deployment: AQE (incl. skew-join splitting, used by the MERGE
 path, SURVEY.md section 2.3), shuffle partitions sized to cores, Arrow enabled for
 the pandas-UDF kernels, and UTC session time zone so timestamp semantics are
 engine-independent (duckdb oracle comparisons).
+
+Driver-held rows (metadata answers, DESCRIBE outputs, broadcast build sides
+of manifest-sized lists) enter Spark only through :func:`local_frame`.
 """
 
 from __future__ import annotations
 
 import os
+from typing import Iterable, Sequence
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 
 def get_spark(
@@ -102,3 +108,29 @@ def tune_session(spark: SparkSession) -> SparkSession:
     except Exception:
         pass
     return spark
+
+
+def local_frame(
+    spark: SparkSession, rows: Iterable[Sequence], schema: StructType | str
+) -> DataFrame:
+    """DataFrame over driver-held tuples, as a ``LocalRelation``.
+
+    ``createDataFrame(<python list>)`` pickles the rows into a parallelized
+    RDD, so collecting even one row (or broadcasting a manifest-sized build
+    side) runs a Spark job, and naive datetimes are read as *local* time
+    (``time.mktime``). One Arrow table typed by the Spark schema becomes a
+    ``LocalTableScan`` instead: no job to collect or broadcast it, and naive
+    timestamps are UTC wall time, like the pinned session time zone.
+    ``schema`` is a ``StructType`` or a DDL string; values must already have
+    the column's Python type (no str() of numbers into string columns).
+    """
+    import pyarrow as pa
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    columns = list(zip(*rows)) or [()] * len(arrow_schema)
+    table = pa.Table.from_arrays(
+        [pa.array(col, type=f.type) for col, f in zip(columns, arrow_schema)],
+        schema=arrow_schema)
+    return spark.createDataFrame(table, schema)

@@ -165,6 +165,7 @@ from .operators.compaction import CompactionJob
 from .operators.delete import DeleteJob
 from .operators.expire import ExpireSnapshotsJob
 from .operators.update import UpdateJob
+from .session import local_frame
 
 _ID = r"[A-Za-z_][\w.$-]*"
 
@@ -1212,8 +1213,8 @@ def manifests(table: Table) -> DataFrame:
         )
         for r in recs
     ]
-    return table.spark.createDataFrame(
-        rows,
+    return local_frame(
+        table.spark, rows,
         "path string, manifest_length long, added_snapshot_id long, "
         "added_files_count int, existing_files_count int, "
         "deleted_files_count int, partition_summaries map<string,string>",
@@ -1226,8 +1227,8 @@ def refs_table(table: Table) -> DataFrame:
              if table.current_snapshot() else None)]
     rows += [(name, r["type"], int(r["snapshot_id"]))
              for name, r in sorted(table.refs.items())]
-    return table.spark.createDataFrame(
-        rows, "name string, type string, snapshot_id long")
+    return local_frame(
+        table.spark, rows, "name string, type string, snapshot_id long")
 
 
 def history(table: Table) -> DataFrame:
@@ -1245,8 +1246,8 @@ def history(table: Table) -> DataFrame:
         for s in sorted(table.snapshots,
                         key=lambda s: s.sequence_number, reverse=True)
     ]
-    return table.spark.createDataFrame(
-        rows,
+    return local_frame(
+        table.spark, rows,
         "version long, timestamp timestamp_ntz, operation string, "
         "parent_version long, summary map<string,string>",
     )
@@ -1287,4 +1288,4 @@ def show_create_table(table: Table, name: str) -> DataFrame:
     if table.meta.cluster_keys:
         stmt += (f";\nALTER TABLE {name} CLUSTER BY "
                  f"({', '.join(table.meta.cluster_keys)})")
-    return table.spark.createDataFrame([(stmt,)], "createtab_stmt string")
+    return local_frame(table.spark, [(stmt,)], "createtab_stmt string")

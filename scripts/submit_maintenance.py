@@ -1,17 +1,24 @@
 """spark-submit entry point for the maintenance engine (north rule: "run via
 spark-submit --py-files on a multi-executor cluster at two cluster sizes").
 
-Package first, then submit the SAME job at N and 4N executors:
+Package first, then submit the SAME job at N and 4N executors. The zip is
+not kept in git: ``scripts/make_pyfiles.py`` builds it from the working tree
+on demand, so it always matches the code being submitted.
 
     python scripts/make_pyfiles.py                     # -> dist/engine.zip
 
     spark-submit --master yarn --deploy-mode client \
         --num-executors 8  --executor-cores 4 --executor-memory 16g \
         --py-files dist/engine.zip \
-        scripts/submit_maintenance.py --table s3a://bkt/t --job maintain
+        scripts/submit_maintenance.py --table /shared/lake/transcripts --job maintain
 
     spark-submit ... --num-executors 32 ... \
-        scripts/submit_maintenance.py --table s3a://bkt/t --job maintain
+        scripts/submit_maintenance.py --table /shared/lake/transcripts --job maintain
+
+The table path must be on a POSIX filesystem that the driver and every
+executor mount at the same path (NFS, Lustre, a FUSE mount): the metadata
+plane commits with ``os.link``/``os.replace`` and plain ``open``, which
+object-store URIs such as ``s3a://`` do not provide.
 
 Each run prints ONE JSON line of per-phase metrics (the same shape bench.py
 emits locally); throughput_turns_per_sec at the two sizes gives the scaling

@@ -19,6 +19,7 @@ from e2e_ocsf_cyber_lakehouse_blueprint_spark.operators.delete import (
 from e2e_ocsf_cyber_lakehouse_blueprint_spark.plans.agg_pushdown import (
     AggItem, metadata_agg,
 )
+from e2e_ocsf_cyber_lakehouse_blueprint_spark.plans.pruning import covers_bounds
 from e2e_ocsf_cyber_lakehouse_blueprint_spark.sql import (
     _try_metadata_agg, run_sql,
 )
@@ -220,3 +221,40 @@ def test_direct_api_in_predicate(cat):
     )
     assert got.collect()[0]["n"] == \
         t.scan().filter(F.col("role").isin("user", "tool")).count()
+
+
+def test_fully_covered_answer_runs_no_job(cat, jobs_run):
+    """The metadata answer is a LocalRelation: collecting it is no Spark job."""
+    c, t = cat
+    want = _expected(t)
+    items = [AggItem("count_star", None, "n_turns"),
+             AggItem("count", "tool", "n_tool"),
+             AggItem("min", "turn_idx", "min_turn"),
+             AggItem("max", "turn_idx", "max_turn"),
+             AggItem("min", "ts", "min_ts"), AggItem("max", "ts", "max_ts")]
+    got = metadata_agg(t, items)
+    with jobs_run() as ran:
+        row = got.collect()[0]
+    assert ran == []
+    assert tuple(row) == tuple(want)
+
+
+@pytest.mark.parametrize("preds,where", [
+    (None, None),
+    ([("turn_idx", ">=", 5)], "turn_idx >= 5"),
+])
+def test_timestamp_min_max_on_non_utc_host(cat, host_tz, preds, where):
+    """Timestamp bounds decode to naive UTC wall time. On a host whose local
+    zone is not UTC the metadata answer must still equal the scan, both when
+    every file is covered and when residual files are folded in."""
+    c, t = cat
+    covered = [all(covers_bounds(f, col, op, v, T.IntegerType())
+                   for col, op, v in preds or [])
+               for f in t.plan_scan(preds)]
+    assert all(covered) if preds is None else any(covered) and not all(covered)
+    items = [AggItem("min", "ts", "mn"), AggItem("max", "ts", "mx")]
+    with host_tz("PST+08"):
+        scan = t.scan() if where is None else t.scan().filter(where)
+        want = scan.agg(F.min("ts"), F.max("ts")).collect()[0]
+        got = metadata_agg(t, items, preds).collect()[0]
+    assert tuple(got) == tuple(want)

@@ -130,6 +130,28 @@ def test_gc_listing_is_distributed_and_injectable(spark, table_with_history, mon
         assert os.path.exists(p)
 
 
+def test_gc_keeps_files_committed_while_listing(spark, table_with_history,
+                                                monkeypatch):
+    """An append that commits after the metadata GC refreshed the table but
+    before the data listing is taken keeps its files."""
+    from e2e_ocsf_cyber_lakehouse_blueprint_spark.operators import expire as ex
+
+    t, df = table_with_history
+    writer = Table.load(spark, t.location)
+    real = ex.disk_listing
+
+    def listing_after_append(table):
+        writer.append(df, n_files=1)
+        return real(table)
+
+    monkeypatch.setattr(ex, "disk_listing", listing_after_append)
+    ex.ExpireSnapshotsJob(t, keep_last=len(t.snapshots) + 1).run()
+    t.refresh()
+    live = [f.path for f in t.live_data_files()]
+    assert all(os.path.exists(p) for p in live)
+    assert t.scan().count() == 3 * df.count()
+
+
 def test_expire_older_than_keeps_recent_history(spark, table_with_history):
     """Age-based retention: snapshots committed at/after the cutoff survive
     even beyond keep_last; older ones expire down to the keep_last floor."""

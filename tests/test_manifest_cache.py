@@ -259,3 +259,30 @@ def test_threads_plan_alike(spark, tmp_table_dir, monkeypatch, fast_switching):
         got = [f.result(timeout=300) for f in futures]
     assert got == [want[i % len(preds)] for i in range(48)]
     assert cache.nbytes == sum(k[0] for k, _, _ in cache._items.values())
+
+
+def test_bounds_decoded_once(spark, tmp_table_dir, monkeypatch):
+    """A second plan compares the same bound strings: ``decode_bound`` hands
+    back the values it decoded for the first, and prunes alike."""
+    t, _ = _table(spark, tmp_table_dir, n_files=3)
+    preds = [("conv_id", "=", "conv-0000000003"),
+             ("ts", ">=", "2025-01-02 00:00:00"), ("turn_idx", "<", 4)]
+    mf.decode_bound.cache_clear()
+    loads: list[str] = []
+    real = mf.json.loads
+
+    def counting(s, *a, **kw):
+        loads.append(s)
+        return real(s, *a, **kw)
+
+    monkeypatch.setattr(mf.json, "loads", counting)
+    bounds = {b for f in t.live_data_files()
+              for side in (f.lower_bounds, f.upper_bounds)
+              for b in side.values()}
+    first = [f.path for f in t.plan_scan(preds)]
+    assert bounds.intersection(loads), "the first plan decodes bounds"
+    del loads[:]
+    second = [f.path for f in t.plan_scan(preds)]
+    assert not bounds.intersection(loads)
+    assert first == second
+    assert mf.decode_bound.cache_info().hits > 0
