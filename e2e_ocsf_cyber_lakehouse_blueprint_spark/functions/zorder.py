@@ -1,10 +1,11 @@
-"""Z-order and Hilbert-curve clustering keys as Arrow-batch pandas UDFs.
+"""Z-order and Hilbert-curve clustering keys.
 
 The engine's replacement for Delta liquid clustering (`cluster_by=["_event_date"]`
 `bronze_github_audit_logs.py:32`; `ALTER TABLE ... CLUSTER BY (time)`
 `utilities/post_setup_ocsf_tables.py:44`): multi-dimensional space-filling-curve
-keys over (xxhash64(conv_id), turn_idx, epoch(ts)), computed vectorized in
-numpy over Arrow batches (input_hint: no per-row Python). The keys feed
+keys over (xxhash64(conv_id), turn_idx, epoch(ts)). The Z-order key is a pure
+Catalyst expression; the Hilbert key is an Arrow-batch pandas UDF computed
+vectorized in numpy (input_hint: no per-row Python). The keys feed
 ``repartitionByRange(zkey) + sortWithinPartitions(zkey)`` so files become
 rectangular regions of key space -> manifest min/max bounds get tight on every
 clustered dimension -> the pruning planner skips files for predicates on ANY
@@ -12,7 +13,7 @@ key dimension, not just the leading one.
 
 Division of labor (scale-aware): per-dimension min-max normalization to 21-bit
 ints is plain Catalyst arithmetic (whole-stage codegen, no Python); ONLY the
-bit interleave crosses the Arrow boundary. Dimension ranges come from manifest
+Hilbert transform crosses the Arrow boundary. Dimension ranges come from manifest
 stats — metadata, not a data scan. Normalizing by the actual range matters:
 epoch-microsecond values inside one retention window share all their high bits,
 so fixed top-bit truncation would collapse the time dimension entirely.
@@ -22,6 +23,8 @@ Hilbert curve", AIP Conf. Proc. 707, 2004), vectorized.
 """
 
 from __future__ import annotations
+
+import functools
 
 import numpy as np
 import pandas as pd
@@ -34,18 +37,6 @@ DIM_MAX = (1 << BITS_PER_DIM) - 1
 
 HASH_LO = float(-(2**63))
 HASH_HI = float(2**63 - 1)
-
-
-def interleave3(a: np.ndarray, b: np.ndarray, c: np.ndarray,
-                bits: int = BITS_PER_DIM) -> np.ndarray:
-    """Bit-interleave three `bits`-wide uint64 arrays -> Morton (Z-order) code."""
-    out = np.zeros(a.shape, dtype=np.uint64)
-    for i in range(bits):
-        bit = np.uint64(i)
-        out |= ((a >> bit) & np.uint64(1)) << np.uint64(3 * i + 2)
-        out |= ((b >> bit) & np.uint64(1)) << np.uint64(3 * i + 1)
-        out |= ((c >> bit) & np.uint64(1)) << np.uint64(3 * i)
-    return out
 
 
 def hilbert3(a: np.ndarray, b: np.ndarray, c: np.ndarray,
@@ -88,27 +79,22 @@ def _as_u64(s: pd.Series) -> np.ndarray:
     return s.to_numpy(dtype=np.int64, na_value=0).astype(np.uint64)
 
 
-# pandas_udf registration needs an active SparkSession (DDL type parsing), so
-# the UDFs are built lazily on first use and cached.
-_UDF_CACHE: dict[str, object] = {}
+@functools.cache
+def _hilbert_udf():
+    """Built lazily on first use and cached: pandas_udf registration needs an
+    active SparkSession (DDL type parsing)."""
 
+    def _fn(a: pd.Series, b: pd.Series, c: pd.Series) -> pd.Series:
+        return pd.Series(hilbert3(_as_u64(a), _as_u64(b), _as_u64(c)).astype(np.int64))
 
-def _curve_udf(curve: str):
-    if curve not in _UDF_CACHE:
-        kernel = {"zorder": interleave3, "hilbert": hilbert3}[curve]
-
-        def _fn(a: pd.Series, b: pd.Series, c: pd.Series) -> pd.Series:
-            return pd.Series(kernel(_as_u64(a), _as_u64(b), _as_u64(c)).astype(np.int64))
-
-        _UDF_CACHE[curve] = pandas_udf(_fn, "long")
-    return _UDF_CACHE[curve]
+    return pandas_udf(_fn, "long")
 
 
 def zorder_key_expr(a: Column, b: Column, c: Column,
                     bits: int = BITS_PER_DIM) -> Column:
     """Morton bit-interleave as a PURE Catalyst expression (63 shift/and/or
-    terms, branch-free -> whole-stage codegen). Measurably beats the Arrow
-    kernel for Z-order because repartitionByRange evaluates the key in its
+    terms, branch-free -> whole-stage codegen). Measurably beat the Arrow
+    kernel it replaced because repartitionByRange evaluates the key in its
     sampling pass, the shuffle, and the output sort — with an expression the
     re-evaluations are register math; with a pandas UDF each one is a Python
     round-trip (and persisting the keyed frame to avoid that trades Python
@@ -163,4 +149,6 @@ def cluster_key_column(
     )
     if curve == "zorder":
         return zorder_key_expr(*dims)
-    return _curve_udf(curve)(*dims)
+    if curve == "hilbert":
+        return _hilbert_udf()(*dims)
+    raise ValueError(f"unknown curve {curve!r}")

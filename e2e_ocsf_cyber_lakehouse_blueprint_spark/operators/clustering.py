@@ -8,7 +8,8 @@ space-filling-curve order over (hash(conv_id), turn_idx, epoch_us(ts)):
 
   plan   (Python): dimension ranges from manifest stats (metadata only);
                    per-partition file census -> n_out = ceil(bytes/target)
-  execute (Spark): scan -> normalize dims (Catalyst) -> curve key (Arrow UDF)
+  execute (Spark): scan -> normalize dims (Catalyst) -> curve key (Catalyst
+                   expression for Z-order, Arrow UDF for Hilbert)
                    -> repartitionByRange(n_out, key) -> sortWithinPartitions(key)
                    -> write (key column dropped — it is a physical layout
                    artifact, never table data)

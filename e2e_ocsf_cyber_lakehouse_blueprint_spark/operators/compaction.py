@@ -31,24 +31,15 @@ import uuid
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
-from pyspark.sql import functions as F
-
 from ..format.manifest import DataFile
 from ..format.stats import (
     harvest_file_stats, layout_bloom_cols, layout_hash_cols,
 )
 from ..format.table import Table
 from .ledger import Ledger, partition_key, spill_metrics, split_size_for_rewrites
-from ..timing import ENABLED as TIMING_ON, phase_timer
-import sys
+from ..timing import phase_timer
 
 DEFAULT_TARGET_FILE_SIZE = 128 * 1024 * 1024
-
-# Rewrite groups at or above this many rows cluster via the sample-free
-# range router; below it, the sampled range exchange's lighter driver side
-# wins (measured crossover — see write_group_global_range and docs/PLANS.md).
-# Override per table with `write.cluster.range-router` = auto|always|never.
-ROUTER_MIN_ROWS = 16_000_000
 
 
 def ffd_pack(items: list[tuple[str, int]], capacity: int) -> list[list[str]]:
@@ -158,7 +149,7 @@ def write_group_binpack(table: Table, group: RewriteGroup,
 
 def write_group_global_range(table: Table, group: RewriteGroup, key_col_name: str,
                              key_expr, job_tag: str,
-                             delete_files=None, eq_delete_files=None) -> str:
+                             delete_files: list, eq_delete_files: list) -> str:
     """Clustering rewrite for a group of partitions in ONE Spark job with ONE
     range exchange: scan all group files as a single relation, compute the
     layout key, ``repartitionByRange(total_bins, partition_cols + key)``,
@@ -169,137 +160,25 @@ def write_group_global_range(table: Table, group: RewriteGroup, key_col_name: st
     phase). Range boundaries can straddle a partition edge; ``partitionBy``
     still routes every row to its correct partition directory — the only
     effect is an occasional extra sub-target-size file, which the next
-    compaction pass folds in."""
+    compaction pass folds in.
+
+    The caller pins both delete lists once per JOB (a live lookup here would
+    re-read the manifest list per group)."""
     spec = table.spec
     files = [f for p in group.plans for f in p.input_files]
-    # callers pin the delete lists once per JOB (a live lookup here would
-    # re-read the manifest list per group)
-    if delete_files is None or eq_delete_files is None:
-        live_dels, live_eqdels = table.live_deletes()
-    dels = delete_files if delete_files is not None else live_dels
-    eqdels = eq_delete_files if eq_delete_files is not None else live_eqdels
     keys = spec.column_names + [key_col_name]
     n = max(1, group.n_output_files)
-    # Physical-strategy choice by data volume (what a cost-based planner
-    # would do). The sampled range exchange re-executes the full child —
-    # payload decode included — once more in the RangePartitioner's hidden
-    # sampling job, but keeps the driver light (one plan). The sample-free
-    # router (below) removes that whole read at the price of ~2 extra
-    # driver-side plans per group. Interleaved A/B at sandbox scale (see
-    # docs/PLANS.md): the router wins on executor work at every scale
-    # (-9%), but its fixed driver cost only amortizes once a group carries
-    # tens of millions of rows — exactly the design regime (a days(ts)
-    # partition at 10^12 turns is ~10^9 rows).
-    total_rows = sum(f.record_count for p in group.plans
-                     for f in p.input_files)
-    mode = table.meta.properties.get("write.cluster.range-router", "auto")
-    use_router = (
-        mode == "always"
-        or (mode == "auto" and total_rows >= ROUTER_MIN_ROWS)
+    df = table.read_data_files(files, delete_files=delete_files,
+                               eq_delete_files=eq_delete_files)
+    df = df.withColumn(key_col_name, key_expr)
+    df = spec.with_partition_columns(df)
+    out = (
+        df.repartitionByRange(n, *keys)
+        .sortWithinPartitions(*keys)
+        .drop(key_col_name)
     )
-    if os.environ.get("SPARK_GRAFT_RANGE_SAMPLE") == "1":  # A/B override
-        use_router = False
-    gtag = f"{job_tag}.g{group.plans[0].key if group.plans else '?'}"
-    if TIMING_ON:
-        print(f"[timing] {gtag} rows={total_rows} plans={len(group.plans)} "
-              f"bins={n} router={use_router}", file=sys.stderr, flush=True)
-    if not use_router:
-        df = table.read_data_files(files, delete_files=dels,
-                                   eq_delete_files=eqdels)
-        df = df.withColumn(key_col_name, key_expr)
-        df = spec.with_partition_columns(df)
-        out = (
-            df.repartitionByRange(n, *keys)
-            .sortWithinPartitions(*keys)
-            .drop(key_col_name)
-        )
-    else:
-        # Sample-free range routing (functions/ranging.py): each partition
-        # plan becomes its own child relation, so bucket assignment needs NO
-        # per-row partition dispatch — just a log2(bins)-deep binary search
-        # tree on the key, with a per-child bucket-id offset. One narrow
-        # sketch pass (key column only, payload never decoded) learns the
-        # bounds; one hash exchange on inverted labels routes bucket i
-        # exactly to reducer i. Equivalent layout to repartitionByRange
-        # minus its hidden full-decode sampling job — at 100 TB that job IS
-        # a second read of the table.
-        from ..functions.ranging import (
-            allocate_buckets, bucket_search_tree, inverse_hash_labels,
-            slice_grid,
-        )
-
-        def child(i_plan):
-            i, plan = i_plan
-            return table.read_data_files(
-                plan.input_files, delete_files=dels, eq_delete_files=eqdels
-            ).withColumn("_pidx", F.lit(i))
-
-        with phase_timer(f"{gtag}.children"), ThreadPoolExecutor(
-                max_workers=min(16, max(1, len(group.plans)))) as pool:
-            children = list(pool.map(child, enumerate(group.plans)))
-        # ONE union, ONE key projection: the curve key is a large expression;
-        # keeping it out of the per-child branches means Catalyst analyzes
-        # and codegen-compiles it once, not |plans| times (measured as tens
-        # of driver-seconds per group at 48 children)
-        un_raw = functools.reduce(lambda a, b: a.unionByName(b), children)
-        un = un_raw.withColumn(key_col_name, key_expr)
-
-        grid_points = min(512, max(32, 2 * max(
-            p.n_output_files for p in group.plans)))
-        fr = [i / grid_points for i in range(1, grid_points)]
-        # the sketch needs ~thousands of rows per bound, not every row:
-        # manifest record counts size the sample fraction (no counting job);
-        # sampling BELOW the key projection means dropped rows never pay
-        # for the curve key either
-        frac = min(1.0, 400_000 / max(1, total_rows))
-        narrow = (un_raw if frac >= 1.0
-                  else un_raw.sample(False, frac, seed=42))
-        narrow = narrow.withColumn(key_col_name, key_expr)
-        with phase_timer(f"{gtag}.sketch"):
-            stat_rows = (
-                narrow.groupBy("_pidx")
-                .agg(F.percentile_approx(
-                         key_col_name, F.array(*[F.lit(f) for f in fr]),
-                         F.lit(2000)).alias("_grid"),
-                     F.count(F.lit(1)).alias("_rows"))
-                .collect()
-            )
-        stats = {r["_pidx"]: (list(r["_grid"] or []), r["_rows"])
-                 for r in stat_rows}
-        n_children = len(children)
-        allocs = allocate_buckets(
-            n, [stats.get(i, ([], 0))[1] for i in range(n_children)])
-        child_bounds = [
-            slice_grid(stats.get(i, ([], 0))[0], allocs[i])
-            for i in range(n_children)
-        ]
-        bases = []
-        base = 0
-        for b in child_bounds:
-            bases.append(base)
-            base += len(b) + 1
-        labels = inverse_hash_labels(base)
-        label_arr = F.array(*[F.lit(int(l)).cast("int") for l in labels])
-
-        def pidx_tree(lo: int, hi: int):
-            # binary dispatch on the child tag (int compares, depth
-            # log2(children)), leaf = that child's key-bounds search tree
-            if lo == hi:
-                return bucket_search_tree(
-                    F.col(key_col_name), child_bounds[lo], bases[lo])
-            mid = (lo + hi) // 2
-            return F.when(F.col("_pidx") <= F.lit(mid),
-                          pidx_tree(lo, mid)).otherwise(pidx_tree(mid + 1, hi))
-
-        routed = un.withColumn("_range_label", F.element_at(
-            label_arr, pidx_tree(0, n_children - 1).cast("int") + F.lit(1)))
-        routed = spec.with_partition_columns(routed)
-        out = (
-            routed.repartition(base, F.col("_range_label"))
-            .sortWithinPartitions(*keys)
-            .drop(key_col_name, "_range_label", "_pidx")
-        )
     out_dir = _staging_dir(table, job_tag)
+    gtag = f"{job_tag}.g{group.plans[0].key if group.plans else '?'}"
     with phase_timer(f"{gtag}.write"):
         _partitioned_write(table, out, out_dir)
     return out_dir

@@ -160,6 +160,9 @@ def write_eqdel_file(table: Table, keys: "DataFrame") -> list[DataFile]:
     blooms_by_path: dict[str, dict[str, str]] = {}
     if bloom_cols:
         from ..format.stats import normalize_path
+        # harvest_blooms, not harvest_key_stats: on a key file of tens of rows
+        # it measured about half the time (0.32 s vs 0.66 s median, local[3],
+        # equal encodings), and this runs on every upsert
         blooms_by_path = {
             normalize_path(p): b
             for p, b in harvest_blooms(

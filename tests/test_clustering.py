@@ -2,22 +2,26 @@
 
 from __future__ import annotations
 
+import datetime
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from e2e_ocsf_cyber_lakehouse_blueprint_spark.format.partition import PartitionSpec, days
-from e2e_ocsf_cyber_lakehouse_blueprint_spark.format.table import Table
-from e2e_ocsf_cyber_lakehouse_blueprint_spark.functions.zorder import (
-    hilbert3, interleave3,
+from e2e_ocsf_cyber_lakehouse_blueprint_spark.format.partition import (
+    PartitionSpec, bucket, days,
 )
+from e2e_ocsf_cyber_lakehouse_blueprint_spark.format.table import Table
+from e2e_ocsf_cyber_lakehouse_blueprint_spark.functions.zorder import hilbert3
 from e2e_ocsf_cyber_lakehouse_blueprint_spark.operators.clustering import (
     ClusteringJob, dimension_ranges,
 )
 from e2e_ocsf_cyber_lakehouse_blueprint_spark.sources.transcripts import (
     SCHEMA_DDL, generate_transcripts,
 )
+
+from curve_oracle import interleave3
 
 
 # ------------------------------------------------------------ kernel units
@@ -158,6 +162,30 @@ def test_clustering_incremental_rewrites_only_new_files(spark, scattered_table):
     assert sorted_rows(t.scan()) == want
 
 
+def test_clustering_on_days_bucket_table(spark, tmp_table_dir):
+    """Partitioned (days + bucket) table: scan equivalence after clustering,
+    and pruning a single day skips the other days' files."""
+    src = generate_transcripts(spark, n_convs=200, hot_convs=2, hot_turns=200,
+                               span_days=6)
+    t = Table.create(
+        spark, tmp_table_dir, schema(),
+        PartitionSpec.of(days("ts_day", "ts"), bucket("conv_bucket", "conv_id", 2)),
+        properties={"write.target-file-size-bytes": str(64 * 1024)},
+    )
+    t.append(src.repartition(6, "text"))
+    before = sorted_rows(t.scan())
+    res = ClusteringJob(t, curve="zorder").run()
+    assert res.files_out >= 1
+    assert sorted_rows(t.scan()) == before
+    live = t.live_data_files()
+    day = sorted({f.partition["ts_day"] for f in live})[0]
+    start = datetime.datetime.fromisoformat(day)
+    kept = t.plan_scan([("ts", ">=", start),
+                        ("ts", "<", start + datetime.timedelta(days=1))])
+    assert 0 < len(kept) < len(live)
+    assert {f.partition["ts_day"] for f in kept} == {day}
+
+
 def test_dimension_ranges_from_manifests(spark, scattered_table):
     t, src = scattered_table
     (t_lo, t_hi), (ts_lo, ts_hi) = dimension_ranges(t.live_data_files())
@@ -170,7 +198,7 @@ def test_zorder_expr_matches_numpy_kernel(spark):
     """The Catalyst-expression Morton key must be bit-identical to the numpy kernel."""
     from pyspark.sql import functions as F
     from e2e_ocsf_cyber_lakehouse_blueprint_spark.functions.zorder import (
-        zorder_key_expr, interleave3, BITS_PER_DIM,
+        zorder_key_expr, BITS_PER_DIM,
     )
     import numpy as np
     import random

@@ -13,9 +13,11 @@ from e2e_ocsf_cyber_lakehouse_blueprint_spark.format.manifest import (
 )
 from e2e_ocsf_cyber_lakehouse_blueprint_spark.functions.xxh64 import xxh64
 from e2e_ocsf_cyber_lakehouse_blueprint_spark.functions.zorder import (
-    BITS_PER_DIM, hilbert3, interleave3,
+    BITS_PER_DIM, hilbert3,
 )
 from e2e_ocsf_cyber_lakehouse_blueprint_spark.operators.compaction import ffd_pack
+
+from curve_oracle import interleave3
 
 
 # ------------------------------------------------------------------- FFD
